@@ -759,19 +759,26 @@ class ParquetTable:
         read time (Spark adopts one file's schema).  Pass True to
         evolve deliberately: the new columns surface via the
         mergeSchema read, NULL on old segments."""
-        if self.exists():
-            cur = {f.name: f.dataType for f in self.read().schema.fields}
-            new = {f.name: f.dataType for f in df.schema.fields}
-            if cur != new and not evolve_schema:
-                raise ValueError(
-                    f"append schema drift on {self.path}: table has "
-                    f"{sorted(cur)} but batch has {sorted(new)} (or a type "
-                    "changed) — pass evolve_schema=True to evolve deliberately"
-                )
+        if self.exists() and not evolve_schema:
+            self._check_drift("append", self.read(), df)
         seg = self._write_segment(df, stats_cols=stats_cols, bloom_cols=bloom_cols)
         self._commit(lambda prior: prior + [seg])
         if auto_compact_at is not None and len(self.segments()) >= auto_compact_at:
             self.compact()
+
+    def _check_drift(self, verb: str, current: DataFrame, batch: DataFrame) -> None:
+        """Raise before any segment lands when ``batch`` differs from the
+        table (``current``, a read of it) by field name or type: a
+        segment of another type commits fine, then every later read
+        fails to merge schemas.  Schema-only — no Spark job."""
+        cur = {f.name: f.dataType for f in current.schema.fields}
+        new = {f.name: f.dataType for f in batch.schema.fields}
+        if cur != new:
+            raise ValueError(
+                f"{verb} schema drift on {self.path}: table has "
+                f"{sorted(cur)} but batch has {sorted(new)} (or a type "
+                "changed) — pass evolve_schema=True to evolve deliberately"
+            )
 
     def _segment_rows(self, seg: str) -> int:
         """Row count of a segment from parquet FOOTERS (no Spark job) —
@@ -1318,17 +1325,19 @@ class ParquetTable:
         if not self.exists():
             self.overwrite(staged, stats_cols=[key0])
             return {"rewritten": [], "survivors": [], "appended": None, "compacted": False}
-        table_cols = self.read().columns
+        current = self.read()
+        table_cols = current.columns
         if evolve_schema:
             # Delta mergeSchema-on-MERGE semantics: columns new in the
             # batch land in its segment and surface as NULL on old
             # segments via the mergeSchema read; table columns missing
             # from the batch read as NULL on its rows.  Without the
-            # flag a schema drift raises via the strict select below —
-            # silent widening is a governance decision, not a default
-            # (same contract as append/upsert).
+            # flag a missing column raises via the strict select below
+            # and a changed type via _check_drift — silent widening is
+            # a governance decision, not a default (same contract as
+            # append/upsert).
             batch_cols = staged.columns
-            tbl_types = {f.name: f.dataType for f in self.read().schema.fields}
+            tbl_types = {f.name: f.dataType for f in current.schema.fields}
             staged = staged.select(
                 *[
                     (
@@ -1342,6 +1351,7 @@ class ParquetTable:
             )
         else:
             staged = staged.select(*table_cols)
+            self._check_drift("upsert_matching", current, staged)
         # Three consumers follow (probe aggregate, victim anti-join,
         # batch segment write): checkpoint the deduped batch once so a
         # potentially expensive staging plan doesn't execute three

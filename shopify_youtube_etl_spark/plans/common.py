@@ -170,15 +170,10 @@ def stream_state_partitions(src_dir: str) -> int:
     out), 32 partitions ≈ 9s, 8 ≈ 3.7s, 4 ≈ 2.9s at quiet minima.
     One partition per ~32 MB of staged NDJSON with a floor of 4 keeps
     the width data-proportional — a 100 TB/day stream sizes itself
-    into hundreds of partitions, and the env override
-    (SPARK_GRAFT_STREAM_STATE_PARTITIONS) pins it where an operator
-    knows the join-state volume better than the source size proxy."""
+    into hundreds of partitions."""
     import math
     import os
 
-    env = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-    if env:
-        return max(1, int(env))
     total = 0
     try:
         for f in os.listdir(src_dir):

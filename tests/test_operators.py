@@ -297,6 +297,19 @@ def test_merge_from_applies_and_truncates(spark, tmp_path):
     assert stg.read().count() == 0
 
 
+def test_upsert_matching_rejects_type_drift(spark, tmp_path):
+    """A batch whose column type differs from the table's raises before
+    any segment lands — committed, it would make every later read fail
+    to merge schemas — the same guard ``append`` has."""
+    tbl = ParquetTable(spark, str(tmp_path / "drift"))
+    tbl.overwrite(spark.createDataFrame([(1, "a"), (2, "b")], "k INT, v STRING"))
+    drifted = spark.createDataFrame([(2, 7), (3, 8)], "k INT, v INT")
+    with pytest.raises(ValueError, match="schema drift"):
+        tbl.upsert_matching(drifted, ["k"])
+    assert len(tbl.segments()) == 1
+    assert sorted(tuple(r) for r in tbl.read().collect()) == [(1, "a"), (2, "b")]
+
+
 def test_sync_control_watermark_semantics(spark, tmp_path):
     sc = SyncControl(spark, str(tmp_path / "ctl"))
     assert sc.last_sync_timestamp() is None

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import copy
 import datetime as dt
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -70,10 +71,6 @@ def test_two_batch_incremental_run(spark, batches, tmp_path_factory):
     ledger = pipe.control.read().orderBy("last_sync_timestamp").collect()
     assert [r["status"] for r in ledger] == ["success"] * 3
 
-    # Staging truncated after merge (S11).
-    for name, stg in pipe.stagings.items():
-        assert stg.read().count() == 0, name
-
 
 def test_empty_batch_does_not_advance_watermark(spark, batches, tmp_path_factory):
     """ADVICE round 1 (pipeline.py:112): an empty micro-batch must
@@ -109,6 +106,57 @@ def test_error_path_writes_error_row(spark, tmp_path_factory):
     assert rows[0]["records_processed"] == 0
 
 
+def test_retry_after_failed_merge_leaves_no_duplicates(spark, batches, tmp_path_factory, monkeypatch):
+    """A run that fails mid-merge must not leak its rows into the next
+    run: after b1, a batch editing 50 orders fails on its first merge;
+    the next run carries newer edits of the same 50 orders and every
+    final table must come out key-unique with the newest versions."""
+    from shopify_youtube_etl_spark.schemas import UNIQUE_KEYS
+
+    d = tmp_path_factory.mktemp("retry")
+    edits = {}
+    for day, price in ((1, "1111.11"), (2, "2222.22")):
+        rows = []
+        for i, r in enumerate(batches["rows"][:50]):
+            r2 = copy.deepcopy(r)
+            r2["updated_at"] = (BASE + dt.timedelta(days=day, minutes=7 * i)).isoformat()
+            r2["total_price"] = price
+            rows.append(r2)
+        edits[day] = str(d / f"edit{day}.ndjson")
+        write_ndjson(rows, edits[day])
+
+    base = str(tmp_path_factory.mktemp("pipe_retry"))
+    pipe = IncrementalPipeline(spark, base)
+    pipe.execute(batches["b1"])
+
+    real = ParquetTable.upsert_matching
+    calls = []
+
+    def fail_first(self, *args, **kwargs):
+        calls.append(self.path)
+        if len(calls) == 1:
+            raise RuntimeError("injected merge failure")
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(ParquetTable, "upsert_matching", fail_first)
+    with pytest.raises(RuntimeError, match="injected merge failure"):
+        pipe.execute(edits[1])
+    r = pipe.execute(edits[2])
+    assert r["status"] == "success" and r["records_processed"] == 50
+
+    for name, tbl in pipe.finals.items():
+        keys = UNIQUE_KEYS[name]
+        dups = tbl.read().groupBy(*keys).count().where(F.col("count") > 1).count()
+        assert dups == 0, f"{name}: {dups} duplicate keys"
+    assert all(v["is_unique"] for v in r["verification"]["uniqueness"].values())
+    orders = pipe.finals["orders"].read()
+    assert orders.count() == 200
+    assert orders.where(F.col("total_price") == 2222.22).count() == 50
+    statuses = [row["status"] for row in pipe.control.read().collect()]
+    assert sorted(statuses) == ["error", "success", "success"]
+    assert sorted(os.listdir(base)) == ["final", "sync_control"]  # no landing copy
+
+
 def test_force_full_load_reprocesses(spark, batches, tmp_path_factory):
     base = str(tmp_path_factory.mktemp("pipe_full"))
     pipe = IncrementalPipeline(spark, base)
@@ -126,10 +174,9 @@ def test_force_full_load_reprocesses(spark, batches, tmp_path_factory):
 @pytest.mark.full
 def test_many_batches_keep_storage_bounded(spark, tmp_path_factory):
     """VERDICT r2 item #4: 20 hourly-style runs must NOT accumulate one
-    segment per run per table — staging appends auto-compact, merge
-    rewrites finals, SyncControl compacts its ledger, and generation GC
-    caps retained manifests, so total on-disk entries stay bounded."""
-    import os
+    segment per run per table — merge rewrites finals, SyncControl
+    compacts its ledger, and generation GC caps retained manifests, so
+    total on-disk entries stay bounded."""
 
     rows = gen_raw_orders(n=3, seed=7)
     src = str(tmp_path_factory.mktemp("tiny") / "batch.ndjson")
@@ -145,12 +192,9 @@ def test_many_batches_keep_storage_bounded(spark, tmp_path_factory):
     for _ in range(20):
         r = pipe.execute(src, force_full_load=True, test_mode=True)
         assert r["status"] == "success"
-        # Live segments: staging compacts at 8, the control ledger at 16,
-        # finals are rewritten by every merge.  Checked after EVERY run —
-        # a single leaked segment per run would breach these by run 20.
-        for name, tbl in pipe.stagings.items():
-            assert len(tbl.segments()) <= 8, f"staging {name} leaked segments"
-            assert manifests(tbl.path) <= keep, f"staging {name} leaked manifests"
+        # Live segments: the control ledger compacts at 16, finals are
+        # rewritten by every merge.  Checked after EVERY run — a single
+        # leaked segment per run would breach these by run 20.
         for name, tbl in pipe.finals.items():
             assert len(tbl.segments()) <= 2, f"final {name} leaked segments"
             assert manifests(tbl.path) <= keep, f"final {name} leaked manifests"
